@@ -212,11 +212,6 @@ HEADLINE = [
     "stream_heavy_hitters",
     "stream_lorenz_incremental",
     "stream_vocab_incremental",
-    # round 11: the transformWithState router promoted to a declared
-    # query — two staged writes + two RocksDB-backed micro-batches
-    # through the typed ValueState counter (same replay-cost shape as
-    # the other streaming twins, plus the state-server round trip).
-    "stream_route_tws",
     # round 13: the parallel lifetime router (VERDICT r12 item 1) —
     # same two staged writes + two foreachBatch micro-batches, but the
     # per-batch work is the distributed zip-with-index instead of a
@@ -234,8 +229,8 @@ HEADLINE = [
 # (median - floor); the adjudicator compares marginals so a twin's
 # divergence flag reflects its data path.
 #
-# EXPLICIT membership (ADVICE r12): every name here routes through
-# stage_two_batch_stream + a writeStream drain; a future stream_*
+# EXPLICIT membership (ADVICE r12): every name here routes through a
+# staged or table replay + a writeStream drain; a future stream_*
 # headline that is NOT a staged-replay twin must simply not be listed
 # (prefix inference would silently subtract the floor from it). The
 # guard below fails the bench loudly if a stream_* headline is added
@@ -256,7 +251,6 @@ STREAM_TWINS = frozenset(
         "stream_heavy_hitters",
         "stream_lorenz_incremental",
         "stream_vocab_incremental",
-        "stream_route_tws",
         "stream_route_lifetime",
     }
     & set(HEADLINE)
@@ -275,21 +269,19 @@ if _UNDECLARED_STREAM_HEADLINES:
 
 def setup_floor_query(spark):
     """The 0-row streaming twin: identical machinery to the staged-
-    replay twins — two single-file parquet drops, an availableNow file
-    stream with maxFilesPerTrigger=1, the mergeable rollup store
-    behind foreachBatch, a checkpoint, and the state-result readout —
-    over ONE data row per batch (a truly empty batch commits no state
-    version; one row keeps the commit path real at negligible row
-    cost). Its cost IS the session's staged-replay setup floor."""
-    import shutil
-    import tempfile
-
+    replay twins — the same ``two_batch_replay`` helper (two single-
+    file parquet drops, an availableNow file stream with
+    maxFilesPerTrigger=1, a checkpoint), the mergeable rollup store
+    behind foreachBatch, and the state-result readout — over ONE data
+    row per batch (a truly empty batch commits no state version; one
+    row keeps the commit path real at negligible row cost). Its cost IS
+    the session's staged-replay setup floor."""
     from prioritizing_event_processing_with_apache_kafka_spark.streaming.rollup import (
         rollup_foreach_batch,
         rollup_state_result,
     )
     from prioritizing_event_processing_with_apache_kafka_spark.streaming.staging import (
-        stage_two_batch_stream,
+        two_batch_replay,
     )
 
     from pyspark.sql import functions as F
@@ -302,32 +294,19 @@ def setup_floor_query(spark):
         F.lit(0).cast("bigint").alias("k"),
         F.lit(1).cast("bigint").alias("v"),
     )
-    root = tempfile.mkdtemp(prefix="peps-floor-")
-    state_path = os.path.join(root, "state")
-    chk = os.path.join(root, "chk")
-    try:
-        src_dir, schema = stage_two_batch_stream(root, [one, one])
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .writeStream.foreachBatch(
-                rollup_foreach_batch(
-                    state_path=state_path,
-                    key_col="k",
-                    specs=[("v_sum", "sum", "v")],
-                )
-            )
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
+    with two_batch_replay() as replay:
+        state_path = os.path.join(replay.root, "state")
+        replay.run(
+            [one, one],
+            rollup_foreach_batch(
+                state_path=state_path,
+                key_col="k",
+                specs=[("v_sum", "sum", "v")],
+            ),
         )
-        q.awaitTermination()
         return rollup_state_result(spark, state_path).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def adjudicate(

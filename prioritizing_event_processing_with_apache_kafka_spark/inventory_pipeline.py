@@ -51,6 +51,9 @@ from prioritizing_event_processing_with_apache_kafka_spark.sources.tables import
     load_table,
     spread,
 )
+from prioritizing_event_processing_with_apache_kafka_spark.streaming.staging import (
+    two_batch_replay,
+)
 
 __all__ = ["PIPELINE_QUERIES", "PIPELINE_ORACLES"]
 
@@ -3101,8 +3104,6 @@ def q_stream_locf_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, which is how a genuine stateful streaming operator gets a
     hash oracle."""
     import os
-    import shutil
-    import tempfile
 
     from prioritizing_event_processing_with_apache_kafka_spark.streaming.locf import (
         locf_foreach_batch,
@@ -3112,50 +3113,23 @@ def q_stream_locf_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "ts", "value"
     )
-    root = tempfile.mkdtemp(prefix="peps-locf-stream-")
-    src_dir = os.path.join(root, "src")
-    state_path = os.path.join(root, "state")
-    out_path = os.path.join(root, "out")
-    chk = os.path.join(root, "chk")
-    os.makedirs(src_dir)
-    try:
-        cutoff = F.lit("2024-01-16").cast("timestamp")
-        batches = [
-            events.filter(F.col("ts") < cutoff),
-            events.filter(F.col("ts") >= cutoff),
-        ]
-        schema = None
-        for i, b in enumerate(batches):
-            stage = os.path.join(root, f"stage{i}")
-            b.coalesce(1).write.parquet(stage)
-            part = next(p for p in os.listdir(stage) if p.endswith(".parquet"))
-            dst = os.path.join(src_dir, f"batch-{i}.parquet")
-            shutil.move(os.path.join(stage, part), dst)
-            os.utime(dst, (1_700_000_000 + i * 3600,) * 2)
-            schema = b.schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+    cutoff = F.lit("2024-01-16").cast("timestamp")
+    with two_batch_replay() as replay:
+        out_path = os.path.join(replay.root, "out")
+        replay.run(
+            [
+                events.filter(F.col("ts") < cutoff),
+                events.filter(F.col("ts") >= cutoff),
+            ],
+            locf_foreach_batch(
+                state_path=os.path.join(replay.root, "state"),
+                out_path=out_path,
+                key_col="event_type",
+                order_cols=("ts", "event_id"),
+                obs_col=F.when(F.col("value") >= 19.0, F.col("value")),
+            ),
         )
-        q = (
-            stream.writeStream.foreachBatch(
-                locf_foreach_batch(
-                    state_path=state_path,
-                    out_path=out_path,
-                    key_col="event_type",
-                    order_cols=("ts", "event_id"),
-                    obs_col=F.when(F.col("value") >= 19.0, F.col("value")),
-                )
-            )
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         return locf_result(spark, out_path).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 SQL_STREAM_LOCF_FILL = """
@@ -3196,8 +3170,6 @@ def q_scd2_stream_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     temp history/checkpoint dirs can be removed before the driver
     collects."""
     import os
-    import shutil
-    import tempfile
 
     from prioritizing_event_processing_with_apache_kafka_spark.streaming.dimension import (
         scd2_current,
@@ -3206,68 +3178,37 @@ def q_scd2_stream_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    root = tempfile.mkdtemp(prefix="peps-scd2-stream-")
-    changelog_dir = os.path.join(root, "changelog")
-    history_path = os.path.join(root, "history")
-    chk = os.path.join(root, "chk")
-    os.makedirs(changelog_dir)
-    try:
+    with two_batch_replay() as replay:
+        history_path = os.path.join(replay.root, "history")
         scd2_init_history(cust, history_path, valid_from="2024-01-01")
-        batches = [
-            cust.filter(F.col("c_custkey") % 5 == 0).select(
-                "c_custkey",
-                F.concat(F.col("c_mktsegment"), F.lit("-B1")).alias(
-                    "c_mktsegment"
+        replay.run(
+            [
+                cust.filter(F.col("c_custkey") % 5 == 0).select(
+                    "c_custkey",
+                    F.concat(F.col("c_mktsegment"), F.lit("-B1")).alias(
+                        "c_mktsegment"
+                    ),
+                    F.lit("2024-03-01").alias("effective"),
                 ),
-                F.lit("2024-03-01").alias("effective"),
-            ),
-            cust.filter(F.col("c_custkey") % 7 == 0).select(
-                "c_custkey",
-                F.concat(F.col("c_mktsegment"), F.lit("-B2")).alias(
-                    "c_mktsegment"
+                cust.filter(F.col("c_custkey") % 7 == 0).select(
+                    "c_custkey",
+                    F.concat(F.col("c_mktsegment"), F.lit("-B2")).alias(
+                        "c_mktsegment"
+                    ),
+                    F.lit("2024-06-01").alias("effective"),
                 ),
-                F.lit("2024-06-01").alias("effective"),
+            ],
+            scd2_foreach_batch(
+                history_path=history_path,
+                key_cols=["c_custkey"],
+                tracked_cols=["c_mktsegment"],
+                effective_col="effective",
+                broadcast_updates=True,
             ),
-        ]
-        # Stage each batch as ONE parquet file with a strictly later
-        # mtime than its predecessor — FileStreamSource orders files by
-        # modification time, so batch boundaries AND order are exact.
-        schema = None
-        for i, b in enumerate(batches):
-            stage = os.path.join(root, f"stage{i}")
-            b.coalesce(1).write.parquet(stage)
-            part = next(
-                p for p in os.listdir(stage) if p.endswith(".parquet")
-            )
-            dst = os.path.join(changelog_dir, f"batch-{i}.parquet")
-            shutil.move(os.path.join(stage, part), dst)
-            os.utime(dst, (1_700_000_000 + i * 3600,) * 2)
-            schema = b.schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(changelog_dir)
         )
-        q = (
-            stream.writeStream.foreachBatch(
-                scd2_foreach_batch(
-                    history_path=history_path,
-                    key_cols=["c_custkey"],
-                    tracked_cols=["c_mktsegment"],
-                    effective_col="effective",
-                    broadcast_updates=True,
-                )
-            )
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         # Eager, lineage-truncating materialization: the result must
-        # outlive the temp dirs removed below.
+        # outlive the temp root removed on exit.
         return scd2_current(spark, history_path).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 SQL_SCD2_STREAM_HISTORY = """
@@ -3789,8 +3730,6 @@ def q_stream_transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     SHARES (the decisive evidence the stateful operator loses nothing
     at the batch seam)."""
     import os
-    import shutil
-    import tempfile
 
     from prioritizing_event_processing_with_apache_kafka_spark.streaming.transitions import (
         transition_counts_result,
@@ -3800,52 +3739,25 @@ def q_stream_transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts"
     )
-    root = tempfile.mkdtemp(prefix="peps-transitions-stream-")
-    src_dir = os.path.join(root, "src")
-    state_path = os.path.join(root, "state")
-    out_path = os.path.join(root, "out")
-    chk = os.path.join(root, "chk")
-    os.makedirs(src_dir)
-    try:
-        cutoff = F.lit("2024-01-16").cast("timestamp")
-        batches = [
-            events.filter(F.col("ts") < cutoff),
-            events.filter(F.col("ts") >= cutoff),
-        ]
-        schema = None
-        for i, b in enumerate(batches):
-            stage = os.path.join(root, f"stage{i}")
-            b.coalesce(1).write.parquet(stage)
-            part = next(p for p in os.listdir(stage) if p.endswith(".parquet"))
-            dst = os.path.join(src_dir, f"batch-{i}.parquet")
-            shutil.move(os.path.join(stage, part), dst)
-            os.utime(dst, (1_700_000_000 + i * 3600,) * 2)
-            schema = b.schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+    cutoff = F.lit("2024-01-16").cast("timestamp")
+    with two_batch_replay() as replay:
+        out_path = os.path.join(replay.root, "out")
+        replay.run(
+            [
+                events.filter(F.col("ts") < cutoff),
+                events.filter(F.col("ts") >= cutoff),
+            ],
+            transitions_foreach_batch(
+                state_path=os.path.join(replay.root, "state"),
+                out_path=out_path,
+                key_col="user_id",
+                state_col="event_type",
+                order_cols=("ts", "event_id"),
+            ),
         )
-        q = (
-            stream.writeStream.foreachBatch(
-                transitions_foreach_batch(
-                    state_path=state_path,
-                    out_path=out_path,
-                    key_col="user_id",
-                    state_col="event_type",
-                    order_cols=("ts", "event_id"),
-                )
-            )
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         return transition_counts_result(spark, out_path).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def q_user_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6970,14 +6882,6 @@ GROUP BY 1
 """
 
 
-# Staging for the availableNow replays — shared home is
-# streaming/staging.py (the tws router promotion in inventory.py needs
-# it too); the local alias keeps this module's call sites unchanged.
-from prioritizing_event_processing_with_apache_kafka_spark.streaming.staging import (  # noqa: E402
-    stage_two_batch_stream as _stage_two_batch_stream,
-)
-
-
 def q_stream_rfm_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming RFM census (VERDICT r8 item 8) — the incremental twin
     of ``customer_rfm`` via the mergeable per-key rollup store
@@ -6994,8 +6898,6 @@ def q_stream_rfm_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     window anywhere; each batch is one map-combined aggregate + one
     key merge join."""
     import os
-    import shutil
-    import tempfile
 
     from prioritizing_event_processing_with_apache_kafka_spark.streaming.rollup import (
         rollup_foreach_batch,
@@ -7005,54 +6907,36 @@ def q_stream_rfm_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_totalprice"
     )
-    root = tempfile.mkdtemp(prefix="peps-rfm-stream-")
-    state_path = os.path.join(root, "state")
-    chk = os.path.join(root, "chk")
-    try:
-        cutoff = F.lit("1995-06-01").cast("timestamp")
-        src_dir, schema = _stage_two_batch_stream(
-            root,
+    cutoff = F.lit("1995-06-01").cast("timestamp")
+    with two_batch_replay() as replay:
+        state_path = os.path.join(replay.root, "state")
+        replay.run(
             [
                 orders.filter(F.col("o_orderdate") < cutoff),
                 orders.filter(F.col("o_orderdate") >= cutoff),
             ],
+            rollup_foreach_batch(
+                state_path=state_path,
+                key_col="o_custkey",
+                specs=[
+                    ("frequency", "count", "1"),
+                    (
+                        "__last_day",
+                        "max",
+                        "unix_micros(CAST(o_orderdate AS TIMESTAMP))"
+                        " DIV 86400000000",
+                    ),
+                    (
+                        "monetary_cents",
+                        "sum",
+                        "CAST(floor(o_totalprice * 100) AS BIGINT)",
+                    ),
+                ],
+            ),
         )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                rollup_foreach_batch(
-                    state_path=state_path,
-                    key_col="o_custkey",
-                    specs=[
-                        ("frequency", "count", "1"),
-                        (
-                            "__last_day",
-                            "max",
-                            "unix_micros(CAST(o_orderdate AS TIMESTAMP))"
-                            " DIV 86400000000",
-                        ),
-                        (
-                            "monetary_cents",
-                            "sum",
-                            "CAST(floor(o_totalprice * 100) AS BIGINT)",
-                        ),
-                    ],
-                )
-            )
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         return _rfm_census(
             rollup_state_result(spark, state_path)
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def q_stream_abc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7066,8 +6950,6 @@ def q_stream_abc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-key aggregate incremental, the ordered scan keeps the
     global rank distributed — no funnel at either stage."""
     import os
-    import shutil
-    import tempfile
 
     from prioritizing_event_processing_with_apache_kafka_spark.streaming.rollup import (
         rollup_foreach_batch,
@@ -7077,48 +6959,30 @@ def q_stream_abc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_shipdate", "l_extendedprice", "l_discount"
     )
-    root = tempfile.mkdtemp(prefix="peps-abc-stream-")
-    state_path = os.path.join(root, "state")
-    chk = os.path.join(root, "chk")
-    try:
-        cutoff = F.lit("1995-06-01").cast("timestamp")
-        src_dir, schema = _stage_two_batch_stream(
-            root,
+    cutoff = F.lit("1995-06-01").cast("timestamp")
+    with two_batch_replay() as replay:
+        state_path = os.path.join(replay.root, "state")
+        replay.run(
             [
                 li.filter(F.col("l_shipdate") < cutoff),
                 li.filter(F.col("l_shipdate") >= cutoff),
             ],
+            rollup_foreach_batch(
+                state_path=state_path,
+                key_col="l_partkey",
+                specs=[
+                    (
+                        "__rev",
+                        "sum",
+                        "CAST(floor(l_extendedprice * (1.0D - l_discount)"
+                        " * 100) AS BIGINT)",
+                    ),
+                ],
+            ),
         )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                rollup_foreach_batch(
-                    state_path=state_path,
-                    key_col="l_partkey",
-                    specs=[
-                        (
-                            "__rev",
-                            "sum",
-                            "CAST(floor(l_extendedprice * (1.0D - l_discount)"
-                            " * 100) AS BIGINT)",
-                        ),
-                    ],
-                )
-            )
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         return _abc_census(
             rollup_state_result(spark, state_path)
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def q_vocab_rank_census(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7184,8 +7048,6 @@ def q_stream_vocab_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     footprint an incremental tokenizer-budget monitor needs — and no
     window appears anywhere."""
     import os
-    import shutil
-    import tempfile
 
     from prioritizing_event_processing_with_apache_kafka_spark.streaming.rollup import (
         rollup_apply_batch,
@@ -7193,22 +7055,8 @@ def q_stream_vocab_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="peps-vocab-stream-")
-    state_path = os.path.join(root, "state")
-    chk = os.path.join(root, "chk")
-    try:
-        src_dir, schema = _stage_two_batch_stream(
-            root,
-            [
-                docs.filter(F.col("doc_id") % 2 == 0),
-                docs.filter(F.col("doc_id") % 2 == 1),
-            ],
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
+    with two_batch_replay() as replay:
+        state_path = os.path.join(replay.root, "state")
 
         def apply(batch, batch_id):
             tokens = batch.select(
@@ -7222,18 +7070,16 @@ def q_stream_vocab_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 batch_id=batch_id,
             )
 
-        q = (
-            stream.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
+        replay.run(
+            [
+                docs.filter(F.col("doc_id") % 2 == 0),
+                docs.filter(F.col("doc_id") % 2 == 1),
+            ],
+            apply,
         )
-        q.awaitTermination()
         return _vocab_census(
             rollup_state_result(spark, state_path)
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 SQL_VOCAB_RANK_CENSUS = """
@@ -7296,8 +7142,6 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decrement path is crash-replay- and truncation-tested in
     ``tests/test_mgstate_stream.py``."""
     import os
-    import shutil
-    import tempfile
 
     from prioritizing_event_processing_with_apache_kafka_spark.streaming.mgstate import (
         mg_exact_topk,
@@ -7305,49 +7149,31 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = load_table(spark, sf_dir, "events").select("ts", "user_id")
-    root = tempfile.mkdtemp(prefix="peps-hh-stream-")
-    state_path = os.path.join(root, "state")
-    chk = os.path.join(root, "chk")
-    try:
-        cutoff = F.lit("2024-01-16").cast("timestamp")
-        src_dir, schema = _stage_two_batch_stream(
-            root,
+    cutoff = F.lit("2024-01-16").cast("timestamp")
+    with two_batch_replay() as replay:
+        state_path = os.path.join(replay.root, "state")
+        replay.run(
             [
                 events.filter(F.col("ts") < cutoff),
                 events.filter(
                     F.col("ts").isNull() | (F.col("ts") >= cutoff)
                 ),
             ],
+            mg_foreach_batch(
+                state_path=state_path,
+                key_col="user_id",
+                capacity=32768,
+            ),
         )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                mg_foreach_batch(
-                    state_path=state_path,
-                    key_col="user_id",
-                    capacity=32768,
-                )
-            )
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         # Certified exact readout (ADVICE r10): recount candidates, then
         # check the 20th count against the accumulated decrement bound;
         # a failed certificate falls back to one full exact recount —
         # see mg_exact_topk. Free on this fixture (capacity >> distinct
         # users ⇒ err_bound 0); loud-and-exact under key growth.
-        source = spark.read.parquet(src_dir)
+        source = spark.read.parquet(replay.src_dir)
         return mg_exact_topk(
             spark, state_path, source, key_col="user_id", k=20
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def q_stream_lorenz_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7362,8 +7188,6 @@ def q_stream_lorenz_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     state keeps the per-key aggregate incremental, the ordered scan
     keeps the global rank distributed — no funnel at either stage."""
     import os
-    import shutil
-    import tempfile
 
     from prioritizing_event_processing_with_apache_kafka_spark.streaming.rollup import (
         rollup_foreach_batch,
@@ -7373,47 +7197,29 @@ def q_stream_lorenz_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_totalprice"
     )
-    root = tempfile.mkdtemp(prefix="peps-lorenz-stream-")
-    state_path = os.path.join(root, "state")
-    chk = os.path.join(root, "chk")
-    try:
-        cutoff = F.lit("1995-06-01").cast("timestamp")
-        src_dir, schema = _stage_two_batch_stream(
-            root,
+    cutoff = F.lit("1995-06-01").cast("timestamp")
+    with two_batch_replay() as replay:
+        state_path = os.path.join(replay.root, "state")
+        replay.run(
             [
                 orders.filter(F.col("o_orderdate") < cutoff),
                 orders.filter(F.col("o_orderdate") >= cutoff),
             ],
+            rollup_foreach_batch(
+                state_path=state_path,
+                key_col="o_custkey",
+                specs=[
+                    (
+                        "__x",
+                        "sum",
+                        "CAST(floor(o_totalprice * 100) AS BIGINT)",
+                    ),
+                ],
+            ),
         )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                rollup_foreach_batch(
-                    state_path=state_path,
-                    key_col="o_custkey",
-                    specs=[
-                        (
-                            "__x",
-                            "sum",
-                            "CAST(floor(o_totalprice * 100) AS BIGINT)",
-                        ),
-                    ],
-                )
-            )
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         return _lorenz_census(
             rollup_state_result(spark, state_path)
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 SQL_HEAVY_HITTERS_CMS = """

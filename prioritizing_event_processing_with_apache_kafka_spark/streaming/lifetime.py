@@ -2,9 +2,9 @@
 
 The reference keeps one ``AtomicInteger`` per bucket for the producer
 process lifetime (``Bucket.java:14,22-29``): record N+1 continues where
-record N left off, across batches. ``route_stream_stateful`` /
-``route_stream_tws`` (``stateful.py``) reproduce that sequence with one
-state-store key per bucket — which serializes each bucket's slice of
+record N left off, across batches. ``route_stream_stateful``
+(``stateful.py``) reproduces that sequence with one state-store key
+per bucket — which serializes each bucket's slice of
 every micro-batch into a single task (the r12 grow probe measured 68×
 wall at 100× data vs 4–5× for the stateless router). This module keeps
 the SAME bit-exact lifetime sequence with full intra-batch parallelism
@@ -17,7 +17,7 @@ the SAME bit-exact lifetime sequence with full intra-batch parallelism
    same technique as the batch exact router
    (``operators/routing.py:_exact_global_sequence``), here
    NULL-bucket-inclusive so unparseable keys keep their own counter
-   exactly like the stateful routers' NULL group.
+   exactly like the stateful router's NULL group.
 2. **reserve** — the stats aggregate also yields per-bucket row counts;
    adding them to the persisted lifetime counters reserves each
    bucket's contiguous block ``[base, base+n)`` for this batch.
@@ -38,7 +38,7 @@ state after batch B committed). Structured Streaming replays at most
 the last uncommitted batch with the SAME batch id after a crash, so
 batch B always reads ``counters-after-{B-1}`` and deterministically
 (re)writes ``counters-after-{B}`` — idempotent exactly-once
-continuation, the same recovery contract the state-store routers get
+continuation, the same recovery contract the state-store router gets
 from checkpointing, at #buckets-row cost instead of state-store I/O.
 
 Keys are expected to be strings (the reference only parses
@@ -117,7 +117,7 @@ def route_batch_lifetime(
     """Route one bounded batch, continuing the lifetime sequence from
     ``base_counters`` (bucket → next seq value; missing buckets start
     at 0). Returns ``(routed, new_counters)`` where ``routed`` has the
-    stateful routers' exact output shape ``(order_col, key_col,
+    stateful router's exact output shape ``(order_col, key_col,
     bucket, partition, seq)`` and ``new_counters`` is the advanced
     counter map to feed the next batch.
 
@@ -165,9 +165,8 @@ def route_batch_lifetime(
     # inherited the ambient shuffle-partition count: one near-empty
     # reducer task per configured partition, PER MICRO-BATCH (32 extra
     # tasks/batch in the 32-core bench; more on a cluster). One reducer
-    # is enough for KBs of partials; scoped set/restore like the tws
-    # router's provider conf (single-writer micro-batch discipline —
-    # the scope is this one collect).
+    # is enough for KBs of partials; scoped set/restore (single-writer
+    # micro-batch discipline — the scope is this one collect).
     part_key = "spark.sql.shuffle.partitions"
     prev_parts = spark.conf.get(part_key)
     spark.conf.set(part_key, "1")

@@ -1,20 +1,27 @@
-"""Micro-batch staging for the streaming twins' availableNow replays.
+"""Micro-batch staging and replay for the streaming twins.
 
-Shared by every streaming twin (RFM/ABC/heavy-hitters/Lorenz/vocab,
-and the transformWithState router): a list of batch frames becomes
-single-file parquet drops with strictly increasing mtimes, so a
-``maxFilesPerTrigger=1`` / availableNow file stream replays them as
-separate micro-batches in a deterministic order.
+Shared by every streaming twin (lifetime router, LOCF, SCD2,
+transitions, RFM/ABC/heavy-hitters/Lorenz/vocab): a list of batch
+frames becomes single-file parquet drops with strictly increasing
+mtimes, so a ``maxFilesPerTrigger=1`` / availableNow file stream
+replays them as separate micro-batches in a deterministic order.
+:func:`two_batch_replay` wraps that staging in the one
+stage → readStream → foreachBatch → checkpoint → drain → cleanup
+block every twin runs.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import tempfile
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
+from pyspark.sql.streaming import StreamingQuery
 
-__all__ = ["stage_two_batch_stream"]
+__all__ = ["stage_two_batch_stream", "two_batch_replay", "TwoBatchReplay"]
 
 
 def stage_two_batch_stream(
@@ -82,3 +89,56 @@ def stage_two_batch_stream(
                 f"{files_per_batch}; use files_per_batch=1 for tiny batches"
             )
     return src_dir, schema
+
+
+class TwoBatchReplay:
+    """A temp ``root`` for one staged replay. Callers put their own
+    state/output dirs under ``root`` (it is removed on exit), then call
+    :meth:`run` once; ``src_dir`` is the staged source afterwards."""
+
+    def __init__(self, root: str) -> None:
+        self.root = root
+        self.src_dir: str | None = None
+        self.query: StreamingQuery | None = None
+
+    def run(
+        self,
+        batches: list[DataFrame],
+        handler: Callable[[DataFrame, int], None],
+        *,
+        files_per_batch: int = 1,
+    ) -> None:
+        """Stage ``batches`` (:func:`stage_two_batch_stream`) and drain
+        them through ``foreachBatch(handler)`` with ``availableNow`` and
+        a checkpoint under ``root``, one micro-batch per staged batch.
+        Returns once the stream has finished; a handler error is raised
+        here."""
+        self.src_dir, schema = stage_two_batch_stream(
+            self.root, batches, files_per_batch=files_per_batch
+        )
+        self.query = (
+            batches[0]
+            .sparkSession.readStream.schema(schema)
+            .option("maxFilesPerTrigger", files_per_batch)
+            .parquet(self.src_dir)
+            .writeStream.foreachBatch(handler)
+            .option("checkpointLocation", os.path.join(self.root, "chk"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        self.query.awaitTermination()
+
+
+@contextmanager
+def two_batch_replay() -> Iterator[TwoBatchReplay]:
+    """Context manager owning one replay's temp root. On exit, normal
+    or by error, the query is stopped and the root removed — so a
+    result read from under ``root`` must be materialized (e.g.
+    ``localCheckpoint(eager=True)``) inside the ``with`` block."""
+    replay = TwoBatchReplay(tempfile.mkdtemp(prefix="peps-replay-"))
+    try:
+        yield replay
+    finally:
+        if replay.query is not None:
+            replay.query.stop()
+        shutil.rmtree(replay.root, ignore_errors=True)

@@ -15,11 +15,10 @@ throughput — state-store I/O costs real latency, and one state key per
 bucket serializes each bucket's assignment into a single task per batch
 (the same trade-off the reference's shared counter makes).
 
-Despite being stateful and order-dependent, the batch-replay harness
-makes it fully hash-oracled: the declared ``stream_route_tws`` query
-replays the events table through a real two-batch checkpointed stream
-and its result is bit-compared against ``SQL_ROUTE_EVENTS_EXACT``
-(``inventory.py``) — the same DuckDB oracle the stateless router uses.
+This is the reference implementation the parallel lifetime router
+(``streaming/lifetime.py``, the declared ``stream_route_lifetime``
+query) is tested against: ``route_batch_lifetime`` chained over the
+same micro-batches must reproduce this operator's sequence per event.
 """
 
 from __future__ import annotations
@@ -41,173 +40,15 @@ from prioritizing_event_processing_with_apache_kafka_spark.plans.config import (
 from prioritizing_event_processing_with_apache_kafka_spark.plans.layout import compute_layout
 
 __all__ = [
-    "ensure_protobuf",
     "route_stream_stateful",
-    "route_stream_tws",
-    "STATEFUL_OUTPUT_SCHEMA",
     "stateful_output_schema",
 ]
-
-# The Google Cloud SDK bundles the public protobuf runtime; this is the
-# same vendored copy tests/conftest.py wires onto PYTHONPATH. Used only
-# as a fallback when the site environment lacks protobuf.
-_VENDORED_PROTOBUF_ROOT = "/usr/lib/google-cloud-sdk/platform/google_appengine"
-
-
-def _private_zip_path(base_tmp: str | None = None) -> str:
-    """Path for the vendored-protobuf zip inside a per-user 0700
-    directory (NOT directly under the world-writable /tmp): a
-    predictable world-readable path could be pre-planted by another
-    local user and would then execute in the driver and every worker
-    via ``addPyFile`` (ADVICE r11). Anything pre-existing that we don't
-    own with exactly these permissions — a symlink, a foreign owner,
-    group/other access, or a foreign-owned zip inside — is refused in
-    favor of a fresh ``mkdtemp`` private dir."""
-    import os
-    import stat as stat_mod
-    import tempfile
-
-    tmp = base_tmp or tempfile.gettempdir()
-    zdir = os.path.join(tmp, f"peps-protobuf-{os.getuid()}")
-    try:
-        os.mkdir(zdir, 0o700)
-    except FileExistsError:
-        st = os.lstat(zdir)
-        if (
-            not stat_mod.S_ISDIR(st.st_mode)
-            or st.st_uid != os.getuid()
-            or (st.st_mode & 0o077) != 0
-        ):
-            zdir = tempfile.mkdtemp(prefix="peps-protobuf-", dir=tmp)
-    zpath = os.path.join(zdir, "peps_vendored_protobuf.zip")
-    if os.path.exists(zpath):
-        st = os.lstat(zpath)
-        if not stat_mod.S_ISREG(st.st_mode) or st.st_uid != os.getuid():
-            zdir = tempfile.mkdtemp(prefix="peps-protobuf-", dir=tmp)
-            zpath = os.path.join(zdir, "peps_vendored_protobuf.zip")
-    return zpath
-
-
-def ensure_protobuf(spark) -> None:
-    """Make the public protobuf runtime importable on the driver AND on
-    Spark's Python workers, at RUNTIME (no pip install, no env-var
-    ordering constraint): transformWithState's state-server protocol is
-    protobuf-framed, and the worker processes import
-    ``google.protobuf.descriptor`` during stream initialization.
-
-    Strategy: if protobuf already imports, done (workers share the same
-    site environment). Otherwise zip the vendored protobuf subtree (with
-    a pkgutil-style ``google/__init__.py`` so zipimport resolves the
-    package — an implicit namespace portion inside a zip does not) and
-    ship it with ``sc.addPyFile``, which both inserts it into the
-    driver's ``sys.path`` and adds it to the python includes every
-    subsequently-created python function carries to its workers. The
-    vendored runtime may trail pyspark's gencode by a minor version
-    (wire-compatible); protobuf's own escape hatch disables the strict
-    equality check — propagated to workers via ``sc.environment``.
-
-    Must run BEFORE ``transformWithStateInPandas`` builds its python
-    function (that call snapshots ``sc.environment`` and the includes).
-    Raises ImportError with a clear message when no protobuf exists
-    anywhere — ``route_stream_stateful`` is the dependency-free
-    equivalent.
-    """
-    import os
-    import sys
-    import tempfile
-    import uuid
-    import zipfile
-
-    os.environ.setdefault("TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK", "true")
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-
-        return
-    except ImportError:
-        pass
-    src = os.path.join(_VENDORED_PROTOBUF_ROOT, "google", "protobuf")
-    if not os.path.isdir(src):
-        raise ImportError(
-            "transformWithStateInPandas needs the 'protobuf' package for "
-            "its state protocol and no vendored copy was found; use "
-            "route_stream_stateful (same output, applyInPandasWithState) "
-            "where protobuf is unavailable"
-        )
-    zpath = _private_zip_path()
-    if not os.path.exists(zpath):
-        tmp = f"{zpath}.tmp-{uuid.uuid4().hex}"
-        with zipfile.ZipFile(tmp, "w") as z:
-            # zipimport needs a REGULAR package; the pkgutil shim keeps
-            # any other on-path google.* portions importable too.
-            z.writestr(
-                "google/__init__.py",
-                "__path__ = __import__('pkgutil')"
-                ".extend_path(__path__, __name__)\n",
-            )
-            for root, _dirs, files in os.walk(src):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        z.write(
-                            full,
-                            os.path.join(
-                                "google",
-                                "protobuf",
-                                os.path.relpath(full, src),
-                            ),
-                        )
-        os.replace(tmp, zpath)  # atomic: concurrent callers see whole zips
-    sc = spark.sparkContext
-    sc.environment["TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK"] = "true"
-    # Two propagation channels, because transformWithState spawns TWO
-    # kinds of python process: task workers honor the python INCLUDES
-    # (addPyFile), while the long-running state-server "driver worker"
-    # (StreamingPythonRunner) honors only the function's ENV VARS — its
-    # PYTHONPATH is sparkPythonPath merged with envVars["PYTHONPATH"].
-    prev = sc.environment.get("PYTHONPATH", "")
-    if zpath not in prev.split(os.pathsep):
-        sc.environment["PYTHONPATH"] = (
-            (prev + os.pathsep if prev else "") + zpath
-        )
-    sc.addPyFile(zpath)
-    # A partially-resolved 'google' namespace module cached BEFORE the
-    # zip joined sys.path would keep shadowing the zip's regular
-    # package; drop ONLY 'google' itself plus any partially-imported
-    # google.protobuf entries and re-resolve. Evicting unrelated
-    # google.* namespace packages (e.g. google.cloud) would break class
-    # identity for code holding live references to the old modules.
-    for name in [
-        n
-        for n in sys.modules
-        if n == "google"
-        or n == "google.protobuf"
-        or n.startswith("google.protobuf.")
-    ]:
-        del sys.modules[name]
-    import importlib
-
-    importlib.invalidate_caches()
-    import google.protobuf.descriptor  # noqa: F401  (verify, or raise)
-
-# Default-column schema (order_col="event_id": long, key_col="key":
-# string) — kept as a constant for back-compat; the operators derive
-# the actual schema from the input stream via stateful_output_schema
-# so non-default key/order columns keep their real names and types.
-STATEFUL_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("key", T.StringType()),
-        T.StructField("bucket", T.StringType()),
-        T.StructField("partition", T.IntegerType()),
-        T.StructField("seq", T.LongType()),
-    ]
-)
 
 
 def stateful_output_schema(
     stream: DataFrame, *, key_col: str = "key", order_col: str = "event_id"
 ) -> T.StructType:
-    """Output schema for the stateful routers, derived from the actual
+    """Output schema for the lifetime routers, derived from the actual
     ``order_col``/``key_col`` types of the input stream (a hardcoded
     long/string pair would mislabel or break e.g. a timestamp order
     column or binary keys at the Arrow conversion)."""
@@ -227,6 +68,7 @@ def stateful_output_schema(
             T.StructField("seq", T.LongType()),
         ]
     )
+
 
 _STATE_SCHEMA = T.StructType([T.StructField("counter", T.LongType())])
 
@@ -302,89 +144,3 @@ def route_stream_stateful(
         GroupStateTimeout.NoTimeout,
     )
 
-
-def route_stream_tws(
-    stream: DataFrame,
-    config: BucketPriorityConfig,
-    num_partitions: int,
-    *,
-    key_col: str = "key",
-    order_col: str = "event_id",
-) -> DataFrame:
-    """The same lifetime counter on Spark 4's ``transformWithState``
-    API: the counter lives in a typed ``ValueState`` managed by a
-    ``StatefulProcessor`` instead of the legacy tuple-state of
-    ``applyInPandasWithState``. Functionally identical output to
-    :func:`route_stream_stateful`; this variant exists because
-    transformWithState is the forward path (composable state variables,
-    timers, TTL) for custom stateful operators.
-
-    Requires ``protobuf`` (the transformWithState state-server protocol
-    is protobuf-framed); :func:`ensure_protobuf` wires the vendored
-    runtime onto the driver and workers at runtime where the site
-    environment lacks one, and raises ImportError with a clear message
-    where none exists — ``route_stream_stateful`` is the
-    dependency-free equivalent.
-    """
-    ensure_protobuf(stream.sparkSession)
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    layout = {
-        r.bucket: (r.partition_lo, r.size)
-        for r in compute_layout(
-            num_partitions, config.buckets_with_allocation(), topic=config.topic
-        )
-    }
-
-    class _Counter(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._counter = handle.getValueState("counter", "counter LONG")
-
-        def handleInputRows(self, key, rows, timer_values):  # noqa: ANN001
-            (bucket,) = key
-            state = self._counter.get()
-            counter = state[0] if state is not None else 0
-            lo_size = layout.get(bucket)
-            chunks = [pdf for pdf in rows if len(pdf)]
-            if chunks:
-                pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                    order_col, kind="mergesort"
-                )
-                n = len(pdf)
-                seq = pd.RangeIndex(counter, counter + n)
-                if lo_size is None:
-                    partition = pd.Series([None] * n, dtype="Int64")
-                elif lo_size[1] == 0:
-                    partition = pd.Series([-1] * n, dtype="Int64")
-                else:
-                    lo, size = lo_size
-                    partition = pd.Series(seq % size + lo, dtype="Int64")
-                yield pd.DataFrame(
-                    {
-                        order_col: pdf[order_col].values,
-                        key_col: pdf[key_col].values,
-                        "bucket": bucket,
-                        "partition": partition.values,
-                        "seq": pd.Series(seq, dtype="int64").values,
-                    }
-                )
-                counter += n
-            self._counter.update((counter,))
-
-        def close(self) -> None:
-            pass
-
-    keyed = stream.withColumn(
-        "bucket", extract_bucket(F.col(key_col), config.delimiter)
-    )
-    return keyed.groupBy("bucket").transformWithStateInPandas(
-        statefulProcessor=_Counter(),
-        outputStructType=stateful_output_schema(
-            stream, key_col=key_col, order_col=order_col
-        ),
-        outputMode="Append",
-        timeMode="None",
-    )

@@ -41,6 +41,7 @@ class TestStreamTwinsExplicit:
 
         drain_markers = (
             "stage_two_batch_stream",
+            "two_batch_replay",
             "_replay_events_stream",
             "_drain_to_memory_sink",
             "_two_batch_rollup_replay",

@@ -178,65 +178,6 @@ def test_counter_survives_restart_across_many_batches(spark, dirs):
         shutil.rmtree(out, ignore_errors=True)
 
 
-def test_tws_counter_continues_across_micro_batches(spark, dirs):
-    # Same contract as route_stream_stateful, on Spark 4's
-    # transformWithState API (typed ValueState in a StatefulProcessor).
-    # The state-server protocol is protobuf-framed; skip where the
-    # container lacks protobuf (route_stream_stateful covers the
-    # semantics dependency-free; conftest wires a locally-available
-    # protobuf onto the worker PYTHONPATH when it finds one).
-    pytest.importorskip("google.protobuf")
-    from prioritizing_event_processing_with_apache_kafka_spark.streaming.stateful import (
-        route_stream_tws,
-    )
-
-    src, chk = dirs
-    chunk(spark, src, 0, 5)
-    source = spark.readStream.schema(SCHEMA).parquet(src)
-    routed = route_stream_tws(source, CFG, 10, order_col="event_id")
-    # transformWithState keeps each state variable in its own column
-    # family — only the RocksDB provider supports that (the default
-    # HDFS-backed provider refuses); scope the provider to this query.
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_prov = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    q = (
-        routed.writeStream.format("memory")
-        .queryName("tws_routed")
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        first = {
-            r["event_id"]: (r["seq"], r["partition"])
-            for r in spark.table("tws_routed").collect()
-        }
-        assert first == {i: (i, i) for i in range(5)}
-
-        chunk(spark, src, 100, 5)
-        q.processAllAvailable()
-        both = {
-            r["event_id"]: (r["seq"], r["partition"])
-            for r in spark.table("tws_routed").collect()
-        }
-        assert both[100] == (5, 5)
-        assert both[101] == (6, 6)
-        assert both[102] == (7, 0)
-        assert both[103] == (8, 1)
-        assert both[104] == (9, 2)
-    finally:
-        q.stop()
-        if prev_prov is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev_prov)
-
-
 def test_statestore_reader_exposes_counter_state(spark, dirs):
     """Spark 4's state data source reads a streaming checkpoint's state
     store as a batch DataFrame — the ops path for inspecting (or
@@ -270,33 +211,10 @@ def test_statestore_reader_exposes_counter_state(spark, dirs):
     assert by_bucket["Platinum"]["groupState"]["counter"] == 7
 
 
-def test_declared_tws_query_matches_batch_exact_router(spark):
-    """The promoted `stream_route_tws` declared query (VERDICT r10 item
-    2) must be bit-identical to the batch exact-mode router: the
-    two-batch id-ordered replay through the typed ValueState counter IS
-    the lifetime AtomicInteger sequence, so both paths share the
-    `route_events_exact` oracle."""
-    from prioritizing_event_processing_with_apache_kafka_spark.inventory import (
-        q_route_events_exact,
-        q_stream_route_tws,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        r["event_id"]: (r["bucket"], r["partition"])
-        for r in q_stream_route_tws(spark, sf).collect()
-    }
-    expect = {
-        r["event_id"]: (r["bucket"], r["partition"])
-        for r in q_route_events_exact(spark, sf).collect()
-    }
-    assert got == expect
-
-
 # ---------------------------------------------------------------------------
 # Parallel lifetime router (streaming/lifetime.py, VERDICT r12 item 1):
 # counter-block reservation + distributed rank must reproduce the
-# stateful routers' sequence bit-exactly with no per-bucket task funnel.
+# stateful router's sequence bit-exactly with no per-bucket task funnel.
 # ---------------------------------------------------------------------------
 
 
