@@ -397,12 +397,14 @@ def streaming_core_queries():
     def lifetime_route_core(spark, sf_dir):
         # Mirror q_stream_route_lifetime's steady state: batch 2 (the
         # post-midpoint events) routed from a non-zero counter base.
-        # The contract is AT MOST one range exchange (the distributed
-        # zip-with-index; a batch sized to one partition takes the
-        # r14 coalesce shortcut instead) + ONE broadcast join (offsets
-        # with the layout folded on) — a per-bucket window/funnel
-        # (#buckets reducers) or a second fact scan sneaking in fails
-        # the pin.
+        # At this size the batch fits one range partition, so the
+        # contract is the single-task path: coalesce(1), then a
+        # per-bucket row_number window over that one partition with
+        # the counter bases and layout as literals — zero exchanges
+        # and zero broadcasts. A window is allowed ONLY over the
+        # already single partition: one that brings in its own
+        # exchange (a per-bucket funnel of #buckets reducers), a
+        # broadcast offsets join or a second fact scan fails the pin.
         from prioritizing_event_processing_with_apache_kafka_spark.inventory import (
             EVENTS_CONFIG,
             EVENTS_NUM_PARTITIONS,

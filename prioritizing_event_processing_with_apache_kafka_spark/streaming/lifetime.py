@@ -10,27 +10,48 @@ wall at 100× data vs 4–5× for the stateless router). This module keeps
 the SAME bit-exact lifetime sequence with full intra-batch parallelism
 (VERDICT r12 item 1):
 
-1. **rank** — distributed per-bucket zip-with-index *within* the batch:
-   one range shuffle on (bucket, order) + local sort +
+1. **path** — chosen per micro-batch from an input property, the
+   batch's ESTIMATED bytes (``_range_partitions``, optimizer stats, no
+   job): a batch that fits one ~32 MB range task takes the
+   single-task path, a larger one the range path. Both give identical
+   rows and counters; only the overhead differs.
+2. **single-task path** — ``coalesce(1)``; one
+   ``groupBy(bucket).count()`` collect (no exchange: the single
+   partition already satisfies the aggregate's clustering) advances
+   the counters; ``row_number()`` over ``partitionBy(bucket)
+   .orderBy(order_col)`` ranks rows in that same partition, again
+   with no exchange. Counter bases and the layout enter as literal
+   CASE lookups over the buckets present in the batch (the NULL
+   bucket by an explicit ``isNull`` branch). Two Spark jobs per
+   micro-batch — the count and the sink's own write — with no
+   persist, no Python worker and no session conf change. A batch with
+   more than ``_MAX_LITERAL_BUCKETS`` distinct buckets takes the range
+   path instead, so the CASE chain stays short.
+3. **range path** — distributed per-bucket zip-with-index *within*
+   the batch: one range shuffle on (bucket, order) + local sort +
    ``monotonically_increasing_id``, then a tiny per-(task, bucket)
    stats aggregate turns local indices into global batch ranks — the
    same technique as the batch exact router
    (``operators/routing.py:_exact_global_sequence``), here
    NULL-bucket-inclusive so unparseable keys keep their own counter
-   exactly like the stateful router's NULL group.
-2. **reserve** — the stats aggregate also yields per-bucket row counts;
-   adding them to the persisted lifetime counters reserves each
-   bucket's contiguous block ``[base, base+n)`` for this batch.
-3. **assign** — ``seq = base(bucket) + rank``; ``partition = lo +
-   seq % size`` exactly as ``Bucket.nextPartition`` computes it
-   (unknown bucket → NULL, starved bucket → -1, reference fall-through
-   parity with ``BucketPriorityPartitioner.java:62-84``).
+   exactly like the stateful router's NULL group. The stats
+   aggregate also yields per-bucket row counts; adding them to the
+   persisted lifetime counters reserves each bucket's contiguous
+   block ``[base, base+n)`` for this batch.
+4. **assign** (both paths) — ``seq = base(bucket) + rank``;
+   ``partition = lo + seq % size`` exactly as ``Bucket.nextPartition``
+   computes it (unknown bucket → NULL, starved bucket → -1, reference
+   fall-through parity with ``BucketPriorityPartitioner.java:62-84``).
 
 Because every per-bucket block is reserved up front, no task ever
 waits on another: the sequence is order-*defined* (by ``order_col``)
-but not order-*computed*. The only driver-side data is the stats
-aggregate — ``#buckets × #range-tasks`` rows (a few KB even at 1000
-executors), the same loop-control-scalar scale as the layout itself.
+but not order-*computed*. The only driver-side data is the per-bucket
+counts (single-task path) or the stats aggregate — ``#buckets ×
+#range-tasks`` rows, a few KB even at 1000 executors — the same
+loop-control-scalar scale as the layout itself. The single-task path
+reads the micro-batch twice (count, then the sink's write), which
+relies on the batch being replayable — the same property the
+exactly-once recovery below already requires.
 
 **State**: the lifetime counters are a ``#buckets``-entry JSON file
 per micro-batch, versioned by batch id (``counters-after-{B}.json`` =
@@ -53,7 +74,7 @@ import json
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from prioritizing_event_processing_with_apache_kafka_spark.functions.keys import extract_bucket
@@ -105,6 +126,15 @@ def _range_partitions(batch_df: DataFrame, *, target_mb: int = 32) -> int:
     return max(1, min(4096, -(-nbytes * 3 // (target_mb << 20))))
 
 
+# Most distinct buckets one batch may hold and still take the
+# single-task path. That path looks each bucket's counter base up in a
+# literal CASE chain (one comparison per branch per row), and a key with
+# no delimiter is its own bucket, so unparseable keys could otherwise
+# grow the chain with the batch. Beyond it the range path's broadcast
+# offsets join does the lookup instead; both paths give identical rows.
+_MAX_LITERAL_BUCKETS = 64
+
+
 def route_batch_lifetime(
     batch_df: DataFrame,
     config: BucketPriorityConfig,
@@ -121,36 +151,130 @@ def route_batch_lifetime(
     bucket, partition, seq)`` and ``new_counters`` is the advanced
     counter map to feed the next batch.
 
-    The returned frame carries a ``_peps_exact_cache`` handle (the
-    persisted rank midframe) so bounded-lifetime callers can unpersist
-    eagerly after sinking — same contract as ``route(mode='exact')``.
+    A batch whose estimated size fits one range partition takes the
+    single-task path and runs one Spark job here (the count collect);
+    routing it is part of the caller's sink action. A larger batch
+    takes the range path, whose returned frame carries a
+    ``_peps_exact_cache`` handle (the persisted rank midframe) so
+    bounded-lifetime callers can unpersist eagerly after sinking —
+    same contract as ``route(mode='exact')``.
     """
     base_counters = base_counters or {}
-    spark = batch_df.sparkSession
 
     tagged = batch_df.select(order_col, key_col).withColumn(
         "bucket", extract_bucket(F.col(key_col), config.delimiter)
     )
+    # The layout is a pure driver-side function of (config,
+    # num_partitions): both paths fold (partition_lo, size) in as
+    # per-bucket constants instead of joining a layout frame. A bucket
+    # absent from it (unknown, or the NULL bucket) routes to NULL; a
+    # starved bucket (size 0) routes to -1.
+    layout = {
+        r.bucket: (r.partition_lo, r.size)
+        for r in compute_layout(
+            num_partitions, config.buckets_with_allocation(), topic=config.topic
+        )
+    }
+    nparts = _range_partitions(batch_df)
+    if nparts == 1:
+        single = tagged.coalesce(1)
+        # One job, no exchange: SinglePartition already satisfies the
+        # aggregate's clustering. The counters come from their own
+        # collect, not from observe() on the sink's action, so they do
+        # not depend on what the sink does with the frame.
+        counts = {
+            r["bucket"]: int(r["count"])
+            for r in single.groupBy("bucket").count().collect()
+        }
+        if len(counts) <= _MAX_LITERAL_BUCKETS:
+            new_counters = dict(base_counters)
+            for b, n in counts.items():
+                new_counters[b] = new_counters.get(b, 0) + n
+            routed = _route_single_task(
+                single,
+                {b: base_counters.get(b, 0) for b in counts},
+                {b: layout[b] for b in counts if b in layout},
+                key_col=key_col,
+                order_col=order_col,
+            )
+            return routed, new_counters
+    return _route_ranged(
+        tagged,
+        nparts,
+        base_counters,
+        layout,
+        key_col=key_col,
+        order_col=order_col,
+    )
+
+
+def _bucket_case(values: dict[str | None, Column], dtype: str) -> Column:
+    """CASE over the ``bucket`` column, one branch per entry of
+    ``values`` (the NULL bucket matched by ``isNull``); any other
+    bucket gets NULL."""
+    bucket = F.col("bucket")
+    expr = None
+    for b, value in values.items():
+        cond = bucket.isNull() if b is None else bucket == F.lit(b)
+        expr = F.when(cond, value) if expr is None else expr.when(cond, value)
+    return (F.lit(None) if expr is None else expr).cast(dtype)
+
+
+def _route_single_task(
+    single: DataFrame,
+    bases: dict[str | None, int],
+    layout: dict[str, tuple[int, int]],
+    *,
+    key_col: str,
+    order_col: str,
+) -> DataFrame:
+    """Rank and assign a one-partition batch in the sink's own task.
+
+    ``bases`` holds the counter base of every bucket in the batch and
+    ``layout`` the (partition_lo, size) of those that are configured.
+    The window's clustering on ``bucket`` is satisfied by the single
+    partition, so the plan has a local sort and no exchange."""
+    rank = F.row_number().over(Window.partitionBy("bucket").orderBy(order_col))
+    base = _bucket_case({b: F.lit(v) for b, v in bases.items()}, "long")
+    ranked = single.withColumn("seq", (base + rank - 1).cast("long"))
+    partition = _bucket_case(
+        {
+            # seq >= 0 always (counters start at 0 and only grow), so %
+            # equals pmod — same arithmetic as Bucket.nextPartition.
+            b: F.lit(-1) if size == 0 else F.lit(lo) + F.col("seq") % size
+            for b, (lo, size) in layout.items()
+        },
+        "int",
+    )
+    return ranked.select(
+        F.col(order_col),
+        F.col(key_col),
+        F.col("bucket"),
+        partition.alias("partition"),
+        F.col("seq"),
+    )
+
+
+def _route_ranged(
+    tagged: DataFrame,
+    nparts: int,
+    base_counters: dict[str | None, int],
+    layout: dict[str, tuple[int, int]],
+    *,
+    key_col: str,
+    order_col: str,
+) -> tuple[DataFrame, dict[str | None, int]]:
+    """Range-shuffle rank for a batch larger than one partition."""
+    spark = tagged.sparkSession
     # Distributed zip-with-index (routing.py:_exact_global_sequence's
     # technique, NULL-group-inclusive): after the range shuffle +
     # local sort, a bucket's rows are globally ordered across task
     # ids, so (per-task offsets + local index) is the batch rank.
-    # r14: a batch that fits ONE range partition skips the range
-    # machinery entirely — repartitionByRange(1) still runs a sampling
-    # job and an exchange per micro-batch, while coalesce(1) + the same
-    # local sort yields the identical single sorted partition (the rank
-    # arithmetic is partition-count-invariant) with no extra job.
-    nparts = _range_partitions(batch_df)
-    gathered = (
-        tagged.coalesce(1)
-        if nparts == 1
-        else tagged.repartitionByRange(
-            nparts, F.col("bucket"), F.col(order_col)
-        )
+    srt = (
+        tagged.repartitionByRange(nparts, F.col("bucket"), F.col(order_col))
+        .sortWithinPartitions(F.col("bucket"), F.col(order_col))
+        .withColumn("__peps_mid", F.monotonically_increasing_id())
     )
-    srt = gathered.sortWithinPartitions(
-        F.col("bucket"), F.col(order_col)
-    ).withColumn("__peps_mid", F.monotonically_increasing_id())
     srt = scoped_persist(srt)
     pid = F.shiftrightunsigned(F.col("__peps_mid"), 33)
     local = F.col("__peps_mid").bitwiseAND(F.lit(_MID_LOCAL_MASK))
@@ -191,29 +315,16 @@ def route_batch_lifetime(
         offset_rows.append((int(row["__peps_pid"]), b, seq_base, int(row["__peps_lo"])))
         new_counters[b] = seq_base + int(row["__peps_cnt"])
 
-    out_schema = stateful_output_schema(
-        batch_df, key_col=key_col, order_col=order_col
-    )
     if not offset_rows:  # empty batch: counters unchanged, empty frame
-        empty = spark.createDataFrame([], out_schema)
+        empty = spark.createDataFrame(
+            [], stateful_output_schema(tagged, key_col=key_col, order_col=order_col)
+        )
         empty._peps_exact_cache = srt  # type: ignore[attr-defined]
         return empty, new_counters
 
-    # The layout is a pure driver-side function of (config,
-    # num_partitions) — fold (partition_lo, size) onto each offsets row
-    # HERE instead of a second broadcast join on the data path (r13,
-    # guide §2.4: the per-bucket layout attributes ride the offsets
-    # broadcast the rows must join anyway; one broadcast join per batch
-    # instead of two). ``__peps_known`` distinguishes "bucket not in
-    # layout" (partition NULL — includes the NULL bucket, exactly what
-    # the old left join on ``bucket == l_bucket`` produced) from a
-    # known starved bucket (size 0 → partition -1).
-    layout = {
-        r.bucket: (r.partition_lo, r.size)
-        for r in compute_layout(
-            num_partitions, config.buckets_with_allocation(), topic=config.topic
-        )
-    }
+    # (partition_lo, size) ride the offsets rows the data must join
+    # anyway; ``__peps_known`` tells an unknown bucket (partition NULL)
+    # from a known starved one (size 0 → partition -1).
     # One parallelize slice: the frame is nparts × (#buckets + 1) tiny
     # rows consumed ONLY as a broadcast build — the default slicing
     # (defaultParallelism) spins one near-empty Python-deserializer

@@ -85,7 +85,18 @@ def locf_enrich(
     row-for-row the old plan's. Extracted from :func:`locf_apply_batch`
     so the per-batch plan shape can be fingerprinted
     (tests/plan_fingerprints.json) without driving the effectful
-    protocol."""
+    protocol.
+
+    NULL keys: the window partitions and :func:`locf_next_state`
+    groups NULL keys together, so all NULL-key rows form ONE key — they
+    carry observations forward among themselves, keep one state row
+    and are seeded from it in the next batch, exactly like the batch
+    LOCF window over the full data (the oracle). Before r14 the seed
+    broadcast join never matched a NULL key (its seed stayed NULL) and
+    the anti-join carry-over kept duplicate NULL-key state rows; the
+    union seeding changed that to the oracle's behaviour. A NULL
+    observation is not a NULL state: it marks a row to fill, and is
+    never stored."""
     # Observation typed against THIS batch: a hardcoded double would
     # fork the output schema between batch 0 (no state) and later
     # batches for non-double observations.

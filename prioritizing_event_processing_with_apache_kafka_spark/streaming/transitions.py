@@ -84,7 +84,23 @@ def transitions_count_plan(
     (key, order, state) first keeps payload columns out of the
     exchange. Extracted from :func:`transitions_apply_batch` so the
     per-batch plan shape can be fingerprinted without driving the
-    effectful protocol."""
+    effectful protocol.
+
+    NULL semantics match the batch ``transition_matrix`` (the oracle):
+
+    - a NULL ``state_col`` value is a state like any other as an edge
+      TARGET (``prev → NULL`` is counted) but never as a SOURCE: the
+      row after it lags into NULL and emits no edge. That holds across
+      the boundary too — a key whose last row was NULL stores a NULL
+      ``__last_state`` (:func:`transitions_next_state` keeps the value
+      at the greatest order, NULL or not), so the next batch's first
+      row emits no edge. Before r14 a NULL in-batch lag was coalesced
+      into the seed and emitted a ``seed → row`` edge the batch
+      operator never counts; streams with NULL states now count the
+      oracle's edges.
+    - NULL keys form ONE key: the window partitions and the state
+      aggregate group them together, so they get one state row and
+      their boundary edge like any other key."""
     state_type = batch.select(F.col(state_col)).schema[0].dataType
     order_types = {
         f.name: f.dataType

@@ -91,6 +91,37 @@ class TestStreamingTransitions:
         _apply(spark, [(3, 1, "a", _t(2))], root, 1)
         assert _result(spark, root) == once
 
+    def test_null_states_and_null_keys_match_batch_operator(self, spark):
+        """A NULL state is an edge target but never a source, across the
+        boundary too; NULL keys form one key. Same as the batch
+        transition_matrix over the concatenated stream."""
+        from prioritizing_event_processing_with_apache_kafka_spark.operators.sequence import (
+            transition_matrix,
+        )
+
+        root = tempfile.mkdtemp(prefix="peps-trans-")
+        b0 = [
+            (1, 1, "a", _t(0)), (2, 1, None, _t(1)), (3, 1, "b", _t(2)),
+            (4, None, "x", _t(0)), (5, None, "y", _t(1)),
+            (6, 2, "a", _t(0)), (7, 2, None, _t(1)),  # batch ends on NULL
+        ]
+        b1 = [(8, 1, "c", _t(3)), (9, None, "z", _t(2)), (10, 2, "b", _t(2))]
+        _apply(spark, b0, root, 0)
+        _apply(spark, b1, root, 1)
+        got = {k: n for k, (n, _ppm) in _result(spark, root).items()}
+        assert got == {
+            ("a", None): 2,
+            ("b", "c"): 1,
+            ("x", "y"): 1,
+            ("y", "z"): 1,  # the NULL key's boundary edge
+        }
+        full = spark.createDataFrame(b0 + b1, SCHEMA)
+        expect = {
+            (r.prev_state, r.next_state): r.transitions
+            for r in transition_matrix(full).collect()
+        }
+        assert got == expect
+
     def test_property_matches_batch_operator_on_any_split(self, spark):
         from hypothesis import HealthCheck, given, settings
         from hypothesis import strategies as st

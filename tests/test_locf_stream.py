@@ -92,6 +92,31 @@ class TestLocf:
         }
         assert got == {1: 20.0, 2: None, 3: 40.0, 4: 20.0}
 
+    def test_null_key_is_one_key_across_batches(self, spark):
+        """NULL keys fill among themselves and are seeded from their own
+        state row in the next batch, like the batch LOCF window."""
+        root = tempfile.mkdtemp(prefix="peps-locf-")
+        _apply(spark, _rows(spark, [
+            (1, None, _t(0), 20.0),
+            (2, None, _t(1), 3.0),
+            (3, "a", _t(1), 30.0),
+        ]), root, 0)
+        _apply(spark, _rows(spark, [
+            (4, None, _t(2), 4.0),
+            (5, "a", _t(3), 5.0),
+        ]), root, 1)
+        got = {
+            r.event_id: (r.filled_value, r.was_filled)
+            for r in locf_result(spark, os.path.join(root, "out")).collect()
+        }
+        assert got == {
+            1: (20.0, False),
+            2: (20.0, True),
+            3: (30.0, False),
+            4: (20.0, True),  # seeded from the NULL key's state row
+            5: (30.0, True),
+        }
+
     def test_replayed_batch_is_exactly_once(self, spark):
         root = tempfile.mkdtemp(prefix="peps-locf-")
         b0 = _rows(spark, [(1, "a", _t(0), 20.0), (2, "a", _t(1), 2.0)])

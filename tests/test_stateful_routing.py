@@ -395,3 +395,164 @@ def test_declared_lifetime_query_matches_batch_exact_router(spark):
         for r in q_route_events_exact(spark, sf).collect()
     }
     assert got == expect
+
+
+# ---------------------------------------------------------------------------
+# Single-task vs range path: route_batch_lifetime picks the path from the
+# batch's estimated size (_range_partitions == 1 → one task, no persist,
+# no exchange). Forcing each path on the same batches pins that the path
+# only moves overhead, never rows, counters or schema.
+# ---------------------------------------------------------------------------
+
+STARVED_CFG = BucketPriorityConfig(
+    topic="events", buckets=["Big", "Tiny"], allocation=[99, 1]
+)
+# layout over 2 partitions: Big=[0..1] (2), Tiny starved (size 0)
+
+
+def _mixed_rows(n0, n):
+    """Big/Tiny keys plus a NULL key and an unknown bucket (Silver)."""
+    out = []
+    for i in range(n0, n0 + n):
+        if i % 7 == 3:
+            key = None
+        elif i % 5 == 4:
+            key = f"Silver-{i}"
+        else:
+            key = f"{['Big', 'Tiny', 'Big'][i % 3]}-{i}"
+        out.append((i, key))
+    return out
+
+
+def _route_with_parts(monkeypatch, nparts, batch, base):
+    from prioritizing_event_processing_with_apache_kafka_spark.streaming import lifetime
+
+    monkeypatch.setattr(lifetime, "_range_partitions", lambda df, **kw: nparts)
+    return lifetime.route_batch_lifetime(batch, STARVED_CFG, 2, base)
+
+
+def test_lifetime_single_task_and_range_paths_agree(spark, monkeypatch):
+    """Two chained batches through both paths, from a non-zero counter
+    base: identical rows, identical advanced counters and the stateful
+    router's output schema on each."""
+    from prioritizing_event_processing_with_apache_kafka_spark.streaming.stateful import (
+        stateful_output_schema,
+    )
+
+    schema = "event_id long, key string"
+    batches = [
+        spark.createDataFrame(_mixed_rows(0, 29), schema),
+        spark.createDataFrame(_mixed_rows(29, 17), schema),
+    ]
+    results = {}
+    for nparts in (1, 3):
+        counters = {"Big": 1000, "Tiny": 5, None: 2}
+        rows = []
+        for batch in batches:
+            routed, counters = _route_with_parts(monkeypatch, nparts, batch, counters)
+            assert routed.schema == stateful_output_schema(batch)
+            cached = getattr(routed, "_peps_exact_cache", None)
+            # only the range path persists a rank midframe
+            assert (cached is None) == (nparts == 1)
+            rows.extend(tuple(r) for r in routed.collect())
+            if cached is not None:
+                cached.unpersist()
+        results[nparts] = (sorted(rows, key=lambda r: r[0]), counters)
+
+    (single_rows, single_counters), (ranged_rows, ranged_counters) = (
+        results[1],
+        results[3],
+    )
+    assert single_rows == ranged_rows
+    assert single_counters == ranged_counters
+    assert len(single_rows) == 46
+    by_bucket = {}
+    for event_id, _key, bucket, partition, seq in single_rows:
+        by_bucket.setdefault(bucket, []).append((event_id, partition, seq))
+    # each group continues its base in event_id order across both batches
+    for bucket, base in (("Big", 1000), ("Tiny", 5), (None, 2), ("Silver", 0)):
+        seqs = [s for _e, _p, s in by_bucket[bucket]]
+        assert seqs == list(range(base, base + len(seqs)))
+        assert single_counters[bucket] == base + len(seqs)
+    assert {p for _e, p, s in by_bucket["Big"]} == {0, 1}
+    assert all(p == s % 2 for _e, p, s in by_bucket["Big"])
+    assert {p for _e, p, _s in by_bucket["Tiny"]} == {-1}  # starved
+    assert {p for _e, p, _s in by_bucket[None]} == {None}
+    assert {p for _e, p, _s in by_bucket["Silver"]} == {None}  # unknown
+
+
+def test_lifetime_paths_on_empty_batch(spark, monkeypatch):
+    from prioritizing_event_processing_with_apache_kafka_spark.streaming.stateful import (
+        stateful_output_schema,
+    )
+
+    empty = spark.createDataFrame([], "event_id long, key string")
+    base = {"Big": 3, None: 1}
+    for nparts in (1, 3):
+        routed, counters = _route_with_parts(monkeypatch, nparts, empty, base)
+        assert counters == base
+        assert routed.schema == stateful_output_schema(empty)
+        assert routed.collect() == []
+        cached = getattr(routed, "_peps_exact_cache", None)
+        if cached is not None:
+            cached.unpersist()
+
+
+def test_lifetime_single_partition_batch_runs_two_jobs(spark, tmp_path):
+    """A batch that fits one range partition costs exactly two Spark
+    jobs end to end: the counter collect and the sink's own write (no
+    persist, no stats shuffle, no offsets frame)."""
+    from prioritizing_event_processing_with_apache_kafka_spark.plans.fingerprint import (
+        plan_exchange_counts,
+    )
+    from prioritizing_event_processing_with_apache_kafka_spark.streaming.lifetime import (
+        _range_partitions,
+        route_batch_lifetime,
+    )
+
+    src = str(tmp_path / "batch")
+    spark.createDataFrame(_mixed_rows(0, 200), "event_id long, key string").write.parquet(
+        src
+    )
+    batch = spark.read.parquet(src)
+    assert _range_partitions(batch) == 1  # selected by the input's size
+
+    sc = spark.sparkContext
+    group = "peps-lifetime-single-task"
+    sc.setJobGroup(group, "single-partition lifetime micro-batch")
+    try:
+        routed, counters = route_batch_lifetime(
+            batch, STARVED_CFG, 2, {"Big": 10}
+        )
+        routed.write.format("noop").mode("overwrite").save()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) == 2, jobs
+    assert plan_exchange_counts(routed) == {
+        "shuffle_exchanges": 0,
+        "broadcast_exchanges": 0,
+    }
+    assert sum(counters.values()) == 10 + 200
+
+
+def test_lifetime_many_buckets_take_range_path(spark, monkeypatch):
+    """More distinct buckets than the literal lookup allows (keys with
+    no delimiter are their own bucket): a one-partition batch falls
+    back to the range path and still matches it row for row."""
+    from prioritizing_event_processing_with_apache_kafka_spark.streaming import lifetime
+
+    n = lifetime._MAX_LITERAL_BUCKETS + 6
+    batch = spark.createDataFrame(
+        [(i, f"Big-{i}" if i % 2 else f"junk{i}") for i in range(2 * n)],
+        "event_id long, key string",
+    )
+    got = {}
+    for nparts in (1, 3):
+        routed, counters = _route_with_parts(monkeypatch, nparts, batch, {"Big": 4})
+        cached = routed._peps_exact_cache  # range path on both
+        got[nparts] = (sorted(tuple(r) for r in routed.collect()), counters)
+        cached.unpersist()
+    assert got[1] == got[3]
+    assert got[1][1]["Big"] == 4 + n

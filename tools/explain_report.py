@@ -72,8 +72,8 @@ REPORT_QUERIES = [
     # subset clustering — the third-decade probe's fix)
     "supplier_ship_sla",
     # round-13 addition: the parallel lifetime router's per-batch core
-    # (one range exchange + broadcast offsets/layout joins — the plan
-    # that replaced the one-task-per-bucket state funnel)
+    # (at fixture size the single-task path: coalesce(1) + a per-bucket
+    # window over that one partition, no exchange and no broadcast)
     "stream_route_lifetime__core",
 ]
 
