@@ -40,6 +40,7 @@ from prioritizing_event_processing_with_apache_kafka_spark.operators.routing imp
 )
 from prioritizing_event_processing_with_apache_kafka_spark.plans.config import BucketPriorityConfig
 from prioritizing_event_processing_with_apache_kafka_spark.plans.layout import compute_layout
+from prioritizing_event_processing_with_apache_kafka_spark.sources.local import local_frame
 from prioritizing_event_processing_with_apache_kafka_spark.sources.tables import (
     load_table,
     normalize_event_ts,
@@ -187,7 +188,8 @@ def q_layout_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (config_id, r.bucket, r.allocation, r.priority_rank,
                  r.partition_lo, r.partition_hi, r.size)
             )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "config_id int, bucket string, allocation int, priority_rank int, "
         "partition_lo int, partition_hi int, bucket_size int",
@@ -257,8 +259,8 @@ def q_assignment_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
         for consumer, pairs in assign(ppt, subs, cfg).items():
             for topic, partition in pairs:
                 rows.append((sid, consumer, topic, partition))
-    return spark.createDataFrame(
-        rows, "scenario_id int, consumer string, topic string, partition int"
+    return local_frame(
+        spark, rows, "scenario_id int, consumer string, topic string, partition int"
     )
 
 
@@ -476,7 +478,8 @@ def q_layout_rebalance_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     # Inner-join semantics of the old two joins: keep buckets present
     # in BOTH layouts (configs share the bucket list, so this is all).
-    both = spark.createDataFrame(
+    both = local_frame(
+        spark,
         [
             (b, new_rows[b][0], new_rows[b][1], old_rows[b])
             for b in new_rows

@@ -11,7 +11,8 @@ The Spark-first re-expression of the reference's producer
   unknown buckets get NULL partition (fall-through,
   ``BucketPriorityPartitioner.java:74``).
 - **P6 layout**: the pure-Python kernel's output becomes a
-  ≤-few-hundred-bytes DataFrame that Catalyst broadcast-joins — no
+  ≤-few-hundred-bytes local relation (``sources/local.py``: no job and
+  no Python worker to build it) that Catalyst broadcast-joins — no
   shuffle of the fact side, ever.
 - **P7 round-robin**: ``partition = partition_lo + pmod(seq, bucket_size)``
   where ``seq`` depends on the routing *mode* (below). Starved buckets
@@ -59,6 +60,7 @@ from pyspark.sql import types as T
 from prioritizing_event_processing_with_apache_kafka_spark.functions.keys import extract_bucket
 from prioritizing_event_processing_with_apache_kafka_spark.plans.config import BucketPriorityConfig
 from prioritizing_event_processing_with_apache_kafka_spark.plans.layout import compute_layout
+from prioritizing_event_processing_with_apache_kafka_spark.sources.local import local_frame
 
 __all__ = [
     "layout_table",
@@ -96,7 +98,7 @@ def layout_table(
         (r.bucket, r.allocation, r.priority_rank, r.partition_lo, r.partition_hi, r.size)
         for r in ranges
     ]
-    return spark.createDataFrame(rows, LAYOUT_SCHEMA)
+    return local_frame(spark, rows, LAYOUT_SCHEMA)
 
 
 # monotonically_increasing_id() = (task id << 33) | row-index-in-task.

@@ -249,7 +249,11 @@ def kll_value_quantiles(
             ],
         )
     )
-    return est_df.join(audit, group_col)
+    # Both sides are aggregates already hash-partitioned by group, so a
+    # sort-merge join adds no exchange. Unhinted, a small size estimate
+    # would plan a broadcast instead: one more exchange (and job) for
+    # the same rows, and a plan that differs between scale factors.
+    return est_df.join(audit.hint("merge"), group_col)
 
 
 def exact_group_percentiles(

@@ -1,4 +1,5 @@
-"""Sources & sinks: fixture tables, interchange formats, Kafka option builders."""
+"""Sources & sinks: fixture tables, interchange formats, driver-row local
+relations, Kafka option builders."""
 
 from prioritizing_event_processing_with_apache_kafka_spark.sources.compaction import (
     compact_parquet,
@@ -12,6 +13,7 @@ from prioritizing_event_processing_with_apache_kafka_spark.sources.formats impor
     write_jsonl,
     write_orc,
 )
+from prioritizing_event_processing_with_apache_kafka_spark.sources.local import local_frame
 from prioritizing_event_processing_with_apache_kafka_spark.sources.zorder import (
     write_zordered,
     zorder_key,
@@ -38,4 +40,5 @@ __all__ = [
     "zorder_key",
     "compact_parquet",
     "directory_bytes",
+    "local_frame",
 ]

@@ -40,6 +40,9 @@ from pyspark.sql import functions as F
 from prioritizing_event_processing_with_apache_kafka_spark.operators.merge import (
     scd2_merge,
 )
+from prioritizing_event_processing_with_apache_kafka_spark.streaming.staging import (
+    run_inheriting,
+)
 
 __all__ = [
     "scd2_init_history",
@@ -143,15 +146,14 @@ def _write_versions_overlapped(
     between the two commits, and replay regenerates BOTH stores
     deterministically from the parent state, so commit order between
     the pair was never load-bearing. Exceptions from either publish
-    propagate (the micro-batch fails and is replayed)."""
+    propagate (the micro-batch fails and is replayed). The publishes
+    keep the query's job group and FAIR pool
+    (:func:`~.staging.run_inheriting`), so they run at the query's
+    priority and are cancelled with it."""
     if len(writes) == 1:
         _write_version(*writes[0])
         return
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-        for f in [pool.submit(_write_version, *w) for w in writes]:
-            f.result()
+    run_inheriting(writes[0][0].sparkSession, _write_version, writes)
 
 
 def scd2_init_history(

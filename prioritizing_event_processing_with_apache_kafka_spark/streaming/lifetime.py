@@ -83,6 +83,7 @@ from prioritizing_event_processing_with_apache_kafka_spark.plans.config import (
     BucketPriorityConfig,
 )
 from prioritizing_event_processing_with_apache_kafka_spark.plans.layout import compute_layout
+from prioritizing_event_processing_with_apache_kafka_spark.sources.local import local_frame
 from prioritizing_event_processing_with_apache_kafka_spark.streaming.stateful import (
     stateful_output_schema,
 )
@@ -316,36 +317,32 @@ def _route_ranged(
         new_counters[b] = seq_base + int(row["__peps_cnt"])
 
     if not offset_rows:  # empty batch: counters unchanged, empty frame
-        empty = spark.createDataFrame(
-            [], stateful_output_schema(tagged, key_col=key_col, order_col=order_col)
+        empty = local_frame(
+            spark, [], stateful_output_schema(tagged, key_col=key_col, order_col=order_col)
         )
         empty._peps_exact_cache = srt  # type: ignore[attr-defined]
         return empty, new_counters
 
     # (partition_lo, size) ride the offsets rows the data must join
     # anyway; ``__peps_known`` tells an unknown bucket (partition NULL)
-    # from a known starved one (size 0 → partition -1).
-    # One parallelize slice: the frame is nparts × (#buckets + 1) tiny
-    # rows consumed ONLY as a broadcast build — the default slicing
-    # (defaultParallelism) spins one near-empty Python-deserializer
-    # task per core, per micro-batch (r14, guide §4: fewer boundary
-    # crossings for the same bytes).
-    offsets = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [
-                (
-                    pid_v,
-                    b,
-                    base,
-                    lo,
-                    b in layout,
-                    layout.get(b, (None, None))[0],
-                    layout.get(b, (None, None))[1],
-                )
-                for pid_v, b, base, lo in offset_rows
-            ],
-            1,
-        ),
+    # from a known starved one (size 0 → partition -1). The frame is
+    # nparts × (#buckets + 1) tiny rows consumed ONLY as a broadcast
+    # build, so it is a local relation: no Python-worker job per
+    # micro-batch to ship it.
+    offsets = local_frame(
+        spark,
+        [
+            (
+                pid_v,
+                b,
+                base,
+                lo,
+                b in layout,
+                layout.get(b, (None, None))[0],
+                layout.get(b, (None, None))[1],
+            )
+            for pid_v, b, base, lo in offset_rows
+        ],
         "__peps_pid long, bucket string, __peps_base long, __peps_lo long, "
         "__peps_known boolean, __peps_l_lo int, __peps_l_size int",
     )

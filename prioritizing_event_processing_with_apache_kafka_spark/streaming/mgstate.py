@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from prioritizing_event_processing_with_apache_kafka_spark.operators.heavyhitters import (
     misra_gries_partial,
 )
+from prioritizing_event_processing_with_apache_kafka_spark.sources.local import local_frame
 from prioritizing_event_processing_with_apache_kafka_spark.streaming.dimension import (
     _latest_version_below,
     _write_version,
@@ -266,10 +267,10 @@ def mg_exact_topk(
             )
         else:
             # Certificate passed: the collected head IS the certified
-            # readout — hand it back as a local-relation DataFrame so
-            # the caller's materialization doesn't re-run the candidate
-            # recount job a second time (ADVICE r11).
-            return spark.createDataFrame(head, top.schema)
+            # readout — hand it back as a local relation so the
+            # caller's materialization re-runs neither the candidate
+            # recount job (ADVICE r11) nor a job to ship the head.
+            return local_frame(spark, head, top.schema)
     return top
 
 

@@ -15,13 +15,42 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
+from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-__all__ = ["stage_two_batch_stream", "two_batch_replay", "TwoBatchReplay"]
+__all__ = [
+    "run_inheriting",
+    "stage_two_batch_stream",
+    "two_batch_replay",
+    "TwoBatchReplay",
+]
+
+
+def run_inheriting(
+    session: SparkSession, fn: Callable[..., Any], arg_tuples: Iterable[tuple]
+) -> list:
+    """``[fn(*args) for args in arg_tuples]``, one pool thread per call,
+    every thread carrying the caller's local properties (job group,
+    FAIR pool) and tags — so the jobs keep the caller's scheduling
+    priority and are cancelled with it. Results in input order; the
+    first exception propagates.
+
+    One ``inheritable_thread_target(session)`` call per task: each call
+    copies the caller's properties once, and a running SQL execution
+    mutates its thread's copy, so two threads must not share one."""
+    arg_tuples = list(arg_tuples)
+    with ThreadPoolExecutor(max_workers=len(arg_tuples)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(session)(fn), *args)
+            for args in arg_tuples
+        ]
+        return [f.result() for f in futures]
 
 
 def stage_two_batch_stream(
@@ -62,13 +91,13 @@ def stage_two_batch_stream(
     # batch 2's scan back-fills the cores batch 1's single write task
     # leaves idle. Every batch's FILE CONTENT is byte-identical to the
     # serial write (same per-batch plan, same coalesce/repartition);
-    # only wall-clock overlaps. The mtime stamping below stays serial
+    # only wall-clock overlaps, and the writes keep the caller's job
+    # group and FAIR pool. The mtime stamping below stays serial
     # driver-side work.
     if len(batches) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(batches)) as pool:
-            stages = list(pool.map(lambda ib: _write_one(*ib), enumerate(batches)))
+        stages = run_inheriting(
+            batches[0].sparkSession, _write_one, enumerate(batches)
+        )
     else:
         stages = [_write_one(i, b) for i, b in enumerate(batches)]
 

@@ -31,3 +31,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def run_in_job_group(spark):
+    """``run(group, fn)`` calls ``fn()`` under job group ``group`` and
+    returns ``(jobs, ungrouped)``: the group's job ids, and the ids of
+    jobs that ran with no job group meanwhile (work that lost the
+    caller's local properties, e.g. on a plain thread pool)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run(group, fn):
+        before = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        ungrouped = set(tracker.getJobIdsForGroup(None)) - before
+        return sorted(tracker.getJobIdsForGroup(group)), sorted(ungrouped)
+
+    return run

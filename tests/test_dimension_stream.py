@@ -257,3 +257,23 @@ def test_empty_frame_commits_no_version(spark, tmp_path):
     _apply(spark, path, [(1, "seg-a2", "2024-02-01")], 1)  # version 2
     assert _versions(spark, path) == [0, 2]
     assert (1, "seg-a2") in _snapshot(spark, path)
+
+
+def test_overlapped_publishes_keep_the_callers_job_group(spark, tmp_path, run_in_job_group):
+    """Both publishes of ``_write_versions_overlapped`` run on pool
+    threads; their jobs must still carry the caller's job group (and so
+    its FAIR pool and cancellation), not run ungrouped."""
+    from prioritizing_event_processing_with_apache_kafka_spark.streaming.dimension import (
+        _versions,
+        _write_versions_overlapped,
+    )
+
+    out, state = str(tmp_path / "out"), str(tmp_path / "state")
+    jobs, ungrouped = run_in_job_group(
+        "peps-overlapped-publish",
+        lambda: _write_versions_overlapped(
+            [(spark.range(5), out, 1), (spark.range(7), state, 1)]
+        ),
+    )
+    assert len(jobs) >= 2 and ungrouped == [], (jobs, ungrouped)
+    assert _versions(spark, out) == [1] and _versions(spark, state) == [1]

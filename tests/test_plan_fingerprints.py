@@ -78,6 +78,28 @@ def test_guard_trips_on_injected_repartition(spark, sf_dir, queries):
     )
 
 
+def test_guard_trips_on_demoted_canary_join(spark, sf_dir, queries):
+    """The layout canary's pin describes its broadcast plan: with the
+    broadcast threshold off, the unhinted layout join demotes to a
+    shuffle join and the guard must see the extra shuffle. (A layout
+    without size statistics plans that shuffle join even in a healthy
+    session, and a pin taken from it cannot tell the two apart.)"""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        spark.catalog.clearCache()
+        actual = plan_exchange_counts(
+            queries["layout_autobroadcast_canary"](spark, sf_dir)
+        )
+    finally:
+        spark.conf.set(key, prev)
+    assert (
+        actual["shuffle_exchanges"]
+        > FINGERPRINTS["layout_autobroadcast_canary"]["shuffle_exchanges"]
+    )
+
+
 def test_fingerprints_cover_zero_shuffle_pipelines(queries):
     """The map-only pipelines must stay map-only: their committed
     fingerprint is zero shuffles, so any future groupBy/join sneaking

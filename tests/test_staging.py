@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from prioritizing_event_processing_with_apache_kafka_spark.streaming.staging import (
+    stage_two_batch_stream,
     two_batch_replay,
 )
 
@@ -51,3 +52,12 @@ def test_handler_error_propagates_and_cleans_up(spark):
             replay.run(_batches(spark), fail_on_second)
     assert spark.streams.active == []
     assert not os.path.exists(root)
+
+
+def test_concurrent_staging_writes_keep_the_callers_job_group(spark, run_in_job_group):
+    with two_batch_replay() as replay:
+        jobs, ungrouped = run_in_job_group(
+            "peps-staging-writes",
+            lambda: stage_two_batch_stream(replay.root, _batches(spark)),
+        )
+    assert len(jobs) >= 2 and ungrouped == [], (jobs, ungrouped)
